@@ -101,7 +101,9 @@ object Jdbc {
     * excel_to_db/excel_to_db.py:72-100: create if missing, else truncate,
     * then bulk insert). `truncate=true` keeps the remote table's DDL
     * (indexes, grants) instead of drop/recreate; the insert itself runs one
-    * batch per Spark partition, in parallel. */
+    * batch per Spark partition, in parallel. Returns the table's row count
+    * after the load, counted by the target database itself over a direct
+    * connection rather than by scanning the table back through Spark. */
   def truncateLoad(df: DataFrame, t: Target, table: String): Long = {
     val writer = df.write.format("jdbc")
       .option("url", t.url).option("dbtable", table)
@@ -109,7 +111,14 @@ object Jdbc {
       .mode(SaveMode.Overwrite)
     t.props.stringPropertyNames().toArray(Array.empty[String])
       .foldLeft(writer)((w, k) => w.option(k, t.props.getProperty(k))).save()
-    read(df.sparkSession, t, table).count()
+    val conn = DriverManager.getConnection(t.url, t.props)
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
+        rs.next(); rs.getLong(1)
+      } finally st.close()
+    } finally conn.close()
   }
 
   /** S4 — record-batch append (first-record column contract,

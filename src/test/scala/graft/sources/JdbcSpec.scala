@@ -45,6 +45,17 @@ class JdbcSpec extends SparkSuite {
     assert(back.map(_.getDouble(2)).toSeq == Seq(1.5, 2.5, 3.5))
   }
 
+  test("truncateLoad into a schema-qualified table returns the loaded row count") {
+    import spark.implicits._
+    Jdbc.runScript(spark, t, "CREATE SCHEMA erp_system")
+    val df = (1 to 25).map(i => (i, s"#$i")).toDF("id", "order_number")
+    assert(Jdbc.truncateLoad(df, t, "erp_system.orders") == 25)
+    assert(Jdbc.truncateLoad(df.filter("id <= 10"), t, "erp_system.orders") == 10)
+    // an empty frame over a populated table empties it
+    assert(Jdbc.truncateLoad(df.filter("id < 0"), t, "erp_system.orders") == 0)
+    assert(Jdbc.read(spark, t, "erp_system.orders").count() == 0)
+  }
+
   test("partitioned JDBC scan returns the same rows across parallel slices") {
     import spark.implicits._
     val df = (1 to 100).map(i => (i, s"row$i")).toDF("id", "payload")
