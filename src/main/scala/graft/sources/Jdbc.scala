@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, Statement}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -111,13 +111,18 @@ object Jdbc {
       .mode(SaveMode.Overwrite)
     t.props.stringPropertyNames().toArray(Array.empty[String])
       .foldLeft(writer)((w, k) => w.option(k, t.props.getProperty(k))).save()
+    withStatement(t) { st =>
+      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
+      rs.next(); rs.getLong(1)
+    }
+  }
+
+  /** One statement on a fresh direct connection, both closed afterwards. */
+  private def withStatement[A](t: Target)(f: Statement => A): A = {
     val conn = DriverManager.getConnection(t.url, t.props)
     try {
       val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
-        rs.next(); rs.getLong(1)
-      } finally st.close()
+      try f(st) finally st.close()
     } finally conn.close()
   }
 
@@ -236,14 +241,8 @@ object Jdbc {
         val df = graft.core.Mat.tracked(readQuery(spark, t, stmt))
         Sql.StatementResult(stmt, isQuery = true, Some(df), -1L)
       } else {
-        val conn = DriverManager.getConnection(t.url, t.props)
-        try {
-          val st = conn.createStatement()
-          try {
-            val affected = st.executeUpdate(stmt).toLong
-            Sql.StatementResult(stmt, isQuery = false, None, affected)
-          } finally st.close()
-        } finally conn.close()
+        val affected = withStatement(t)(_.executeUpdate(stmt).toLong)
+        Sql.StatementResult(stmt, isQuery = false, None, affected)
       }
     }
   }

@@ -11,7 +11,7 @@ A gain is claimed only when the change wins at least 9 in 10 pairs and the
 medians differ by more than the parent's IQR.
 
     python3 tools/ab_pairs.py <parent-checkout> <change-checkout> \\
-        --workload etl_ingest --pairs 10 [--seed0 401] [--out ab.json]
+        --workload etl_ingest --pairs 10 [--seed0 401]
 
 It only reads what the benchmark prints: it edits nothing under
 perfbench/ and never touches BENCHMARK.json. Run it from anywhere; each
@@ -51,7 +51,6 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=401,
                     help="seed of the first pair; pair i uses seed0 + i")
-    ap.add_argument("--out", help="also write every run's result here as JSON")
     a = ap.parse_args()
     if a.pairs < 2:
         sys.exit("ab_pairs: --pairs must be at least 2")
@@ -100,9 +99,6 @@ def main():
         print(f"    change median {cq[1]:.4g}  q1 {cq[0]:.4g}  q3 {cq[2]:.4g}")
         print(f"    median change {diff:+.4g} ({diff / pq[1]:+.1%}); change won "
               f"{wins}/{a.pairs} pairs -> {verdict}")
-    if a.out:
-        with open(a.out, "w") as fh:
-            json.dump({"workload": a.workload, "pairs": runs}, fh, indent=1)
 
 
 if __name__ == "__main__":
